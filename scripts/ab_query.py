@@ -3,7 +3,7 @@ a PRIOR GIT REF of their builder module(s) — the repo-standard adjudication
 shape for any cross-change timing claim.
 
 Usage:
-    python scripts/ab_query_r12.py <git_ref> <query[,query...]> [reps]
+    python scripts/ab_query.py <git_ref> <query[,query...]> [reps]
 
 Loads the builder registry twice: once from the working tree (NEW) and
 once from <git_ref> materialized into a temp dir (OLD), then times
@@ -35,7 +35,7 @@ def main() -> None:
 
     from stream_processing_project_spark.session import default_sf_dir, get_spark
 
-    spark = get_spark("ab-r12")
+    spark = get_spark("ab-query")
     sf_dir = default_sf_dir()
 
     from stream_processing_project_spark.plans.registry import all_queries
@@ -43,9 +43,6 @@ def main() -> None:
     new_q = dict(all_queries())
 
     # import the OLD tree under an isolated module namespace
-    import importlib
-    import importlib.util
-
     saved = {
         k: v for k, v in sys.modules.items()
         if k.startswith("stream_processing_project_spark")
@@ -56,7 +53,6 @@ def main() -> None:
     try:
         import stream_processing_project_spark.plans.registry as old_reg  # noqa
 
-        importlib.reload(old_reg) if False else None
         old_q = dict(old_reg.all_queries())
     finally:
         sys.path.remove(old_dir)

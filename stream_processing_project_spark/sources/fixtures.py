@@ -8,6 +8,15 @@ EngagementProcessor.scala:83-85).
 At 100 TB these reads are the dominant cost: never cache a fact table,
 always let the filter/projection reach the scan (verify via
 `.explain("formatted")` → `PushedFilters` / `ReadSchema`).
+
+The reference also knew its dimension's columns up front, so it never
+paid for schema discovery. A plain `spark.read.parquet` does: each call
+runs one Spark job just to read a parquet footer, and a query builder
+that loads seven tables runs seven of them. `load_table` therefore
+memoises the schema Spark inferred, keyed by file identity and the
+inference confs, and hands it back via `spark.read.schema(...)` — see
+its docstring for the key. Only the StructType is kept: no DataFrame,
+no file listing, no data.
 """
 
 from __future__ import annotations
@@ -17,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 from stream_processing_project_spark.schemas import FIXTURE_TABLES
 
@@ -29,10 +39,54 @@ from stream_processing_project_spark.schemas import FIXTURE_TABLES
 # is a no-op — kept so either fixture vintage loads correctly.
 _NANO_TS_COLS = {"events": ["ts"]}
 
+# Session confs that change what parquet schema inference returns. A
+# caller's own session need not carry session.py's pins, and any session
+# may flip one at any time, so each is part of the memo key.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (resolved path, inference confs) -> (file identity, inferred schema).
+# One entry per path and conf set: a rewritten file replaces its entry.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _file_identity(path: str) -> tuple | None:
+    """`(st_mtime_ns, st_size)` of a parquet file, or of every file under
+    a Spark-written directory (with its relative name, so an added or
+    removed part file changes it too). None when the path is not on the
+    local filesystem, which disables the memo for it."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((st.st_mtime_ns, st.st_size),)
+    if not os.path.isdir(path):
+        return None
+    out = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+    return tuple(sorted(out))
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table. Plain `spark.read.parquet` — no schema
-    override (parquet carries its own), no cache (scale!).
+    """Scan one fixture table, with a memoised schema and no cache (scale!).
+
+    Schema memo: the first call for a file runs Spark's own parquet
+    schema inference (`spark.read.parquet`, one Spark job) and keeps the
+    resulting StructType; later calls pass it to
+    `spark.read.schema(cached).parquet(path)`, which runs no job. The key
+    is the resolved path, `(st_mtime_ns, st_size)` of the file (or of
+    every file when the path is a Spark-written directory), and the
+    session confs in `_INFERENCE_CONFS`, so a rewritten file or a flipped
+    conf is a miss and is inferred afresh. Only the StructType is
+    memoised: every call still builds a new DataFrame that lists the
+    path, so files added to a directory are seen, and no data is cached.
 
     Timestamp normalization: the fixtures store ts as parquet
     TIMESTAMP(MICROS, isAdjustedToUTC=false). Under a session with
@@ -44,16 +98,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session timezone is UTC in both our session and DuckDB's oracle
     reading of the same file, so wall-clock == instant and the cast is
     value-preserving). This makes every downstream query
-    session-config-independent.
+    session-config-independent. The casts are read off the schema and
+    applied in one projection.
     """
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for c, dt in df.dtypes:
-        if dt == "timestamp_ntz":
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    for c in _NANO_TS_COLS.get(name, []):
-        if c in df.columns and dict(df.dtypes)[c] == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
-    return df
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    ident = _file_identity(path)
+    confs = tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
+    key = (os.path.realpath(path), confs)
+    hit = _SCHEMAS.get(key)
+    if ident is not None and hit and hit[0] == ident:
+        schema = hit[1]
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if ident is not None:
+            _SCHEMAS[key] = (ident, schema)
+
+    casts = {}
+    for f in schema.fields:
+        if isinstance(f.dataType, TimestampNTZType):
+            casts[f.name] = F.col(f.name).cast("timestamp")
+        elif f.name in _NANO_TS_COLS.get(name, []) and isinstance(f.dataType, LongType):
+            casts[f.name] = F.timestamp_micros(F.expr(f"{f.name} div 1000"))
+    return df.withColumns(casts) if casts else df
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:

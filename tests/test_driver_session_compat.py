@@ -16,6 +16,8 @@ and run every formerly-exposed query end to end.
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 
 from tests.conftest import SF_SMOKE
@@ -46,7 +48,7 @@ def ntz_session(spark):
         spark.conf.set(NTZ_CONF, prev)
 
 
-def test_loader_normalizes_ntz_to_timestamp(ntz_session):
+def test_loader_normalizes_ntz_to_timestamp(ntz_session, tmp_path):
     from stream_processing_project_spark.sources.fixtures import load_table
 
     # Raw read under NTZ inference yields timestamp_ntz ...
@@ -55,6 +57,21 @@ def test_loader_normalizes_ntz_to_timestamp(ntz_session):
     # ... but load_table normalizes it.
     df = load_table(ntz_session, SF_SMOKE, "events")
     assert dict(df.dtypes)["ts"] == "timestamp"
+
+    # A schema memoised with the conf OFF must not be reused once it is
+    # flipped ON in the same session: the conf is part of the memo key. A
+    # fresh copy of the file, so that the OFF load is the one that fills it.
+    shutil.copyfile(f"{SF_SMOKE}/events.parquet", tmp_path / "events.parquet")
+    ntz_session.conf.set(NTZ_CONF, "false")
+    off = load_table(ntz_session, str(tmp_path), "events")
+    assert dict(off.dtypes)["ts"] == "timestamp"
+    ntz_session.conf.set(NTZ_CONF, "true")
+    on = load_table(ntz_session, str(tmp_path), "events")
+    assert dict(on.dtypes)["ts"] == "timestamp"
+    # ... because it reads the file as Spark infers it under ON (NTZ, then
+    # the cast), not with the schema memoised under OFF.
+    assert "cast(ts#" in on._jdf.queryExecution().analyzed().toString()
+    assert sorted(off.select("ts").collect()) == sorted(on.select("ts").collect())
 
 
 @pytest.mark.parametrize("name", NTZ_EXPOSED)
