@@ -1,14 +1,17 @@
-"""Capture .explain('formatted') for every bench-tagged query (and any
-names passed with --only a,b,c) into plans/r12/<name>_<suffix>.txt, plus
-a one-line-per-query plan-shape audit (Exchange count, join strategies,
-Python eval nodes, scans) on stdout.
+"""Capture .explain('formatted') for every bench-tagged query (or only
+the names passed with --only a,b,c) into <out_dir>/<name>_<suffix>.txt,
+plus a one-line-per-query plan-shape audit (Exchange count, join
+strategies, Python eval nodes, scans) on stdout.
 
 Usage:
-    python scripts/capture_plans_r12.py before          # all bench queries
-    python scripts/capture_plans_r12.py after --only cdc_upsert_materialize
+    python scripts/capture_plans.py plans/r12 before    # all bench queries
+    python scripts/capture_plans.py plans/r12 after --only cdc_upsert_materialize
 """
 from __future__ import annotations
 
+import argparse
+import contextlib
+import io
 import os
 import re
 import sys
@@ -41,16 +44,15 @@ def plan_audit(plan: str) -> dict:
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = None
-    if "--only" in sys.argv:
-        only = set(sys.argv[sys.argv.index("--only") + 1].split(","))
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("out_dir", help="directory the plan dumps are written to")
+    ap.add_argument("suffix", nargs="?", default="before")
+    ap.add_argument("--only", help="comma-separated query names")
+    args = ap.parse_args()
+    out_dir, only = args.out_dir, set(args.only.split(",")) if args.only else None
     sf_dir = default_sf_dir()
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12"
-    )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("capture-plans-r12")
+    spark = get_spark("capture-plans")
     qs = {
         n: q
         for n, q in sorted(all_queries().items())
@@ -58,10 +60,11 @@ def main() -> None:
     }
     for name, q in qs.items():
         df = q.builder(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-            df._jdf.queryExecution(), "formatted"
-        )
-        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
+        with open(os.path.join(out_dir, f"{name}_{args.suffix}.txt"), "w") as f:
             f.write(plan)
         a = plan_audit(plan)
         flags = " ".join(f"{k}={v}" for k, v in a.items() if v)

@@ -56,8 +56,6 @@ def bucketed_running_sum(
     descending: bool = False,
     n_buckets: int = 32,
     out_col: str = "cum",
-    plan_offsets: bool = False,
-    pin_input: bool = True,
 ):
     """Global ordered running sum WITHOUT a single-partition window —
     the range-partitioned ranking idiom (r04; first used by
@@ -74,36 +72,20 @@ def bucketed_running_sum(
     values sort last (nulls_last both directions), matching
     desc_nulls_last / asc_nulls_last window semantics.
 
-    `order_col` must be NUMERIC (approxQuantile's precondition — the
-    range boundaries come from its sketch); non-numeric orderings fall
-    back to the plain global ordered window with a one-line warning in
-    the plan comment sense: correct, serial at the margin, and the
-    caller should quantize or map the ordering to a numeric key to get
-    the partitioned form.
-
-    `plan_offsets=True` (r07 verdict task 3 — amortize the construction
-    constant): the ENTIRE construction moves into the lazy plan — no
-    persist, no driver jobs. Boundaries come from an in-plan
-    `approx_percentile` 1-row aggregate crossJoined as a broadcast
-    scalar (the denominators idiom), and the per-range prefix offsets
-    from a ≤(n_buckets+1)-row window over the per-bucket sums joined
-    back as a broadcast — bucketing-invariance is exactly what makes
-    the sketchier in-plan boundary source legal (ANY monotone boundary
-    set yields the same cumsum; only parallel balance varies, and the
-    percentile sketch keeps it balanced). The construction reads its
-    input three times IN ONE JOB (bounds agg, per-bucket sums, main),
-    so the input is lazily pinned here (r12, VERDICT r11 task 7) and
-    all three reads serve from one computation at action time — every
-    plan_offsets consumer is single-pass on its input lineage. Pass
-    `pin_input=False` when `df` is ALREADY a checkpoint (sax's vals):
-    re-pinning a pinned frame would copy its blocks for nothing.
-
-    The input is persisted for the CONSTRUCTION phase only (boundary
-    sketch + per-range sums are driver actions; without the cache each
-    would re-scan the input's full lineage) and released before
-    returning — the kmeans_fit lifetime pattern, so registry-wide
-    sweeps accumulate nothing and the returned plan recomputes the
-    input in one pass.
+    Preconditions:
+      * the partitioned form needs a NUMERIC `order_col` (approxQuantile
+        draws the range boundaries from its sketch). A non-numeric
+        ordering falls back to the plain global ordered window: correct,
+        but serial — quantize or map the ordering to a numeric key to
+        get the partitioned form;
+      * `df` must recompute identically. It is persisted for the
+        construction only (boundary sketch + per-range sums are two
+        driver jobs that would otherwise each re-scan its lineage),
+        released before returning — the kmeans_fit lifetime pattern, so
+        registry-wide sweeps accumulate nothing — and recomputed by the
+        returned plan at execution. A nondeterministic input (rand,
+        unordered first/limit) would pair offsets from one computation
+        with rows from another; pin such an input before calling.
 
     Returns (df + out_col, bucket_col_name) — callers drop the bucket
     column when done; it is exposed so plan pins can assert the window
@@ -112,77 +94,17 @@ def bucketed_running_sum(
     from pyspark.sql import functions as F
     from pyspark.sql.types import NumericType
 
-    ties = tie_cols or []
+    oc = F.col(order_col)
+    order = [
+        oc.desc_nulls_last() if descending else oc.asc_nulls_last(),
+        *[F.col(c) for c in tie_cols or []],
+    ]
     if not isinstance(df.schema[order_col].dataType, NumericType):
-        oc = F.col(order_col)
-        order = [
-            oc.desc_nulls_last() if descending else oc.asc_nulls_last(),
-            *[F.col(c) for c in ties],
-        ]
         w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
         return (
             df.withColumn("_rsb", F.lit(0)).withColumn(
                 out_col, F.sum(value_col).over(w)
             ),
-            "_rsb",
-        )
-    oc = F.col(order_col)
-    order = [
-        oc.desc_nulls_last() if descending else oc.asc_nulls_last(),
-        *[F.col(c) for c in ties],
-    ]
-    if plan_offsets:
-        if pin_input:
-            df = df.localCheckpoint(eager=False)
-        probes = ", ".join(str(i / n_buckets) for i in range(1, n_buckets))
-        bounds_row = df.agg(
-            F.array_sort(
-                F.array_distinct(
-                    F.expr(
-                        f"approx_percentile(CAST({order_col} AS DOUBLE),"
-                        f" array({probes}), 10000)"
-                    )
-                )
-            ).alias("_rs_bs")
-        )
-        in_front = (
-            (lambda b: b > oc.cast("double"))
-            if descending
-            else (lambda b: b < oc.cast("double"))
-        )
-        # bucket id = #boundaries in front of the value in the chosen
-        # direction (descending counts b > v), so ids stay monotone
-        # with the ordering; NULL order values take the last bucket
-        # (nulls_last), and an all-NULL percentile (empty input) folds
-        # everything into bucket 0
-        bucket = F.when(
-            oc.isNull() | F.col("_rs_bs").isNull(),
-            F.coalesce(F.size("_rs_bs"), F.lit(0)),
-        ).otherwise(F.size(F.filter(F.col("_rs_bs"), in_front)))
-        bucketed = (
-            df.crossJoin(F.broadcast(bounds_row))
-            .withColumn("_rsb", bucket)
-            .drop("_rs_bs")
-        )
-        per_range = bucketed.groupBy("_rsb").agg(
-            F.sum(value_col).alias("_rs_s")
-        )
-        woff = Window.orderBy("_rsb").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = per_range.select(
-            "_rsb",
-            F.coalesce(F.sum("_rs_s").over(woff), F.lit(0)).alias("_rs_off"),
-        )
-        w = (
-            Window.partitionBy("_rsb")
-            .orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        return (
-            bucketed.join(F.broadcast(offsets), "_rsb")
-            .withColumn(out_col, F.col("_rs_off") + F.sum(value_col).over(w))
-            .drop("_rs_off"),
             "_rsb",
         )
     df = df.persist()
@@ -193,21 +115,15 @@ def bucketed_running_sum(
             reverse=descending,
         )
         barr = F.array(*[F.lit(b) for b in bounds])
-        oc = F.col(order_col)
+        # bucket id = #boundaries in front of the value in the chosen
+        # direction (descending counts b > v), so ids stay monotone
+        # with the ordering; NULL order values take the last bucket
+        # (nulls_last)
         in_front = (lambda b: b > oc) if descending else (lambda b: b < oc)
         bucket = F.when(oc.isNull(), F.lit(len(bounds))).otherwise(
             F.size(F.filter(barr, in_front))
         )
         bucketed = df.withColumn("_rsb", bucket)
-        order = [
-            oc.desc_nulls_last() if descending else oc.asc_nulls_last(),
-            *[F.col(c) for c in ties],
-        ]
-        w = (
-            Window.partitionBy("_rsb")
-            .orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
         per_range = {
             int(r["b"]): r["s"]
             for r in bucketed.groupBy(F.col("_rsb").alias("b"))
@@ -223,6 +139,11 @@ def bucketed_running_sum(
     off = F.element_at(
         F.create_map(*[F.lit(x) for b in offsets for x in (b, offsets[b])]),
         F.col("_rsb"),
+    )
+    w = (
+        Window.partitionBy("_rsb")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
         bucketed.withColumn(out_col, off + F.sum(value_col).over(w)),

@@ -5756,9 +5756,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     coc = cnt.groupBy("c").agg(F.count(F.lit(1)).cast("bigint").alias("f"))
-    cum, _b = bucketed_running_sum(
-        coc, "f", "c", descending=True, out_col="cumf", plan_offsets=True
-    )
+    cum, _b = bucketed_running_sum(coc, "f", "c", descending=True, out_col="cumf")
     offs = cum.select("c", (F.col("cumf") - F.col("f")).cast("bigint").alias("off"))
     salted = cnt.withColumn(
         "salt", F.pmod(F.xxhash64("word"), F.lit(256)).cast("int")

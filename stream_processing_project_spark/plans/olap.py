@@ -5530,22 +5530,11 @@ def timeseries_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
         # |users|·8 rows — far smaller than the fact table.
         .localCheckpoint(eager=True)
     )
-    # vals is itself checkpointed: the plan_offsets running sum scans
-    # its input 3x in one job (bounds agg, per-bucket sums, main), so
-    # without the pin the grid->vals aggregation ran 3x and nn's count
-    # made a 4th grid read — the executed plan showed the checkpointed
-    # grid rescanned 5x. Now: grid read 2x (vals build + sym join),
-    # vals read from its own checkpoint. nn folds into vals (row count
-    # = sum of per-value counts — exact bigint identity, same oracle).
-    vals = (
-        grid.groupBy("v")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)
-    )
+    # nn folds into vals (row count = sum of per-value counts — exact
+    # bigint identity, same oracle)
+    vals = grid.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     nn = vals.agg(F.sum("c").cast("bigint").alias("n"))
-    cum, bcol = bucketed_running_sum(
-        vals, "c", "v", out_col="cum", plan_offsets=True, pin_input=False
-    )
+    cum, bcol = bucketed_running_sum(vals, "c", "v", out_col="cum")
     buck = (
         cum.drop(bcol)
         .crossJoin(F.broadcast(nn))

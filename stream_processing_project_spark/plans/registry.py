@@ -64,153 +64,13 @@ def oracles() -> dict[str, str]:
 
 _LOADED = False
 
-# The driver's CORRECTNESS gate sampled only the FIRST 50 registered
-# queries in r01 (module import order meant analytics + extensions
-# monopolized the window; olap/scalar_surface/governance/
-# streaming_queries got zero rows — VERDICT.md "What's wrong" #3). To
-# make any prefix of the registry representative, registration order is
-# rewritten after load: an explicit high-risk priority list first (the
-# r01-red/latent queries, so their fixes get hard driver rows), then a
-# round-robin interleave across modules, previously-uncovered modules
-# leading. Harmless when the gate runs all queries; decisive when it
-# truncates.
-_PRIORITY = [
-    # r06 rebuild (VERDICT r05 task 1): exactly the 97 registry names
-    # that have never had a driver correctness row, in drain order —
-    # the benched-every-round TPC-H heads first, then the r03-priority
-    # leftovers the r05 window skipped, then the remaining backlog
-    # family-interleaved so the ~50-query window keeps diversity.
-    # The first ~50 land in CORRECTNESS_r06; the tail rolls to r07.
-    # Greens yield their slot automatically (_reorder), so this list
-    # self-drains as rounds land. New-operator registration is FROZEN
-    # until this backlog drops below one driver window (~50 names).
-    "olap_shipping_priority",
-    "olap_returned_items",
-    "olap_filtered_revenue",
-    "olap_top_brands",
-    "olap_pivot_order_status",
-    "similarity_kmeans_train",
-    "similarity_ann_ivf_trained",
-    "streaming_ewma_state",
-    "streaming_dedup_minhash",
-    "streaming_decayed_topk",
-    "maintenance_compaction_plan",
-    "olap_abc_pareto",
-    "sampling_curriculum_anneal",
-    "olap_attribution_markov",
-    "streaming_distinct_users_hll",
-    "profile_benford_deviation",
-    "features_mutual_info_rank",
-    "sampling_domain_cap",
-    "timeseries_anomaly_mad",
-    "governance_column_masking",
-    "similarity_matryoshka_topk",
-    "text_adaptive_quality_filter",
-    "corpus_build_pipeline",
-    "quality_expectations",
-    "recon_full_outer_activity",
-    "active_customers_semi",
-    "json_variant_extract",
-    "multimodal_decode_real",
-    "udtf_word_bigrams",
-    "vector_stats_hof",
-    "olap_brand_band_revenue",
-    "streaming_event_transitions",
-    "profile_distinct_kmv_theta",
-    "features_pit_join",
-    "sampling_epoch_materialize",
-    "timeseries_autocorrelation",
-    "governance_crypto_shred",
-    "similarity_quantized_topk",
-    "text_heavy_hitters",
-    "corpus_data_card",
-    "quality_freshness_volume",
-    "recon_snapshot_diff",
-    "olap_cohort_ltv",
-    "streaming_interval_join_outer",
-    "profile_distinct_rollup_hll",
-    "features_standard_scale",
-    "sampling_shard_shuffle",
-    "timeseries_ewma_smooth",
-    "governance_retention_sweep",
-    "similarity_rank_fusion",
-    "text_normalize",
-    "olap_conversion_paths_topk",
-    "streaming_linear_fit",
-    "profile_events_columns",
-    "features_woe_encoding",
-    "sampling_temperature_mix",
-    "timeseries_linear_forecast",
-    "olap_cube_order_totals",
-    "streaming_m4_downsample",
-    "profile_join_cardinality",
-    "olap_decayed_topk",
-    "streaming_pit_features",
-    "profile_ks_drift",
-    "olap_distinct_quantiles",
-    "streaming_redact_pii",
-    "profile_skew_gini",
-    "olap_exists_subquery",
-    "streaming_text_chunk",
-    "profile_value_histogram",
-    "olap_first_last_nth",
-    "streaming_text_quality",
-    "olap_idle_rich_customers",
-    "olap_interpurchase_time",
-    "olap_lateral_top_orders",
-    "olap_market_basket",
-    "olap_median_order_value",
-    "olap_min_cost_supplier",
-    "olap_mv_join_delta",
-    "olap_nation_communities",
-    "olap_nation_kcore",
-    "olap_nation_trade_volume",
-    "olap_new_vs_returning",
-    "olap_ntile_value_quartiles",
-    "olap_part_supplier_variety",
-    "olap_percent_rank_spend",
-    "olap_product_profit",
-    "olap_promo_part_suppliers",
-    "olap_promo_revenue_share",
-    "olap_recursive_calendar",
-    "olap_rfm_segments",
-    "olap_rollup_lineitem",
-    "olap_skew_salted_join",
-    "olap_skyline_2d",
-    "olap_small_quantity_revenue",
-    "olap_top_supplier_revenue",
-    "olap_unpivot",
-    "olap_yoy_growth",
-    # r07 additions, appended BEHIND the r06 backlog (which must drain
-    # to zero this round — 47 names + these = the r07 window). Order:
-    # the three whose verdict "done" criteria name a CORRECTNESS_r07
-    # row first; olap_frequent_itemsets' criterion is oracle+plan-pin,
-    # so it takes the slot most likely to roll to r08.
-    "streaming_session_window",
-    "profile_quantile_sketch",
-    "similarity_ann_ivfpq_e2e",
-    "olap_frequent_itemsets",
-    "dedup_jaccard_prefix",
-    # r07 late additions (post-backlog-drain session): the 52 names
-    # above already fill the ~50-slot window, so these join the r08
-    # window head; each rehearsed hash-green (32 + 7/5 layouts) on
-    # registration.
-    "similarity_nn_descent_graph",
-    "similarity_nn_descent_recall",
-    "sampling_dsir_importance",
-    "text_classifier_train_nb",
-    "retrieval_eval_ndcg",
-    "timeseries_dtw_pairs",
-    "similarity_dbscan_clusters",
-    "sampling_kcenter_diversity",
-    # r08 additions: registered EARLY (VERDICT r08 window guidance) so
-    # they land inside the driver's ~50-name correctness window behind
-    # the 13 rollovers (10 never-checked + 3 md5-upgraded sketches).
-    "similarity_mmr_select",
-    "similarity_graph_beam_search",
-    "similarity_knn_outliers",
-    "sampling_prototypicality",
-]
+# The driver's CORRECTNESS gate may sample only a prefix of the registry
+# (r01 checked the FIRST 50 registered queries, and module import order
+# left whole modules with zero rows — VERDICT.md "What's wrong" #3). To
+# make any prefix representative, registration order is rewritten after
+# load: never-green queries first, interleaved round-robin across
+# modules, then greens stalest first. Harmless when the gate runs all
+# queries; decisive when it truncates.
 
 # Round-robin module order: modules with zero r01 driver rows first.
 _MODULE_ORDER = [
@@ -296,33 +156,16 @@ def _reorder() -> None:
     for q in _REGISTRY.values():
         mod = q.builder.__module__.rsplit(".", 1)[-1]
         by_module.setdefault(mod, []).append(q)
-    for qs in by_module.values():
-        qs.sort(key=lambda q: q.name in green)  # stable: unverified first
 
-    ordered: list[Query] = []
-    seen: set[str] = set()
-    # Priority names yield their front-of-window slot once they carry a
-    # green driver row (any round) — otherwise a stale priority list
-    # would re-consume the whole 50-query window next round and stall
-    # the rotation. A priority name that FAILED its driver check stays
-    # at the front for the retry.
-    for name in _PRIORITY:
-        if name in _REGISTRY and name not in seen and name not in green:
-            ordered.append(_REGISTRY[name])
-            seen.add(name)
-    # Never-green queries next (module-interleaved for family diversity)
+    # Never-green queries first (module-interleaved for family diversity)
     # — a module that runs out of unverified names must not let its
     # green tail crowd first-time names out of the driver's 50-window.
-    queues = [
-        [q for q in qs if q.name not in seen and q.name not in green]
-        for qs in by_module.values()
-    ]
+    queues = [[q for q in qs if q.name not in green] for qs in by_module.values()]
+    ordered: list[Query] = []
     while any(queues):
         for qu in queues:
             if qu:
-                q = qu.pop(0)
-                ordered.append(q)
-                seen.add(q.name)
+                ordered.append(qu.pop(0))
     # Greens last, STALEST FIRST (VERDICT r08 task 2): with the whole
     # registry ever-checked, the driver's ~50-window would otherwise
     # re-verify an arbitrary module-interleaved prefix while 79 names
@@ -330,11 +173,10 @@ def _reorder() -> None:
     # Ordering greens by last-checked round ascending turns each round's
     # window into a rolling re-verification of the oldest evidence.
     status = _driver_status()
-    greens = [q for q in _REGISTRY.values() if q.name not in seen]
-    greens.sort(key=lambda q: (status.get(q.name, ("", 0))[1], q.name))
-    for q in greens:
-        ordered.append(q)
-        seen.add(q.name)
+    ordered += sorted(
+        (q for q in _REGISTRY.values() if q.name in green),
+        key=lambda q: (status.get(q.name, ("", 0))[1], q.name),
+    )
     _REGISTRY.clear()
     _REGISTRY.update({q.name: q for q in ordered})
 

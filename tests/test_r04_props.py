@@ -210,7 +210,10 @@ def test_bucketed_running_sum_equals_global_cumsum(spark):
     (backs abc_pareto, percent_rank, token_budget, RFM): for random
     values with heavy ties, in both directions, with nulls, the
     bucketed result must equal the plain sorted-prefix reference —
-    for ANY boundary set the sketch happens to pick."""
+    for ANY boundary set the sketch happens to pick. Every example also
+    runs repartitioned to 7 partitions (the rehearsal's adversarial
+    layout) and with the order key as a string (the non-numeric
+    fallback); an empty frame runs once."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -230,19 +233,21 @@ def test_bucketed_running_sum_equals_global_cumsum(spark):
         max_size=60,
     )
 
-    @settings(
-        max_examples=6,
-        deadline=None,
-        suppress_health_check=[HealthCheck.too_slow],
-    )
-    @given(rows=rows_strategy, descending=st.booleans())
-    def check(rows, descending):
-        data = [(i, k, v) for i, (_, k, v) in enumerate(rows)]
+    def verify(data, descending, layout):
         df = spark.createDataFrame(data, "id long, k long, v long")
+        if layout == "repartition7":
+            df = df.repartition(7)
+        elif layout == "string_key":
+            # zero-padded, so string order == numeric order on -50..50;
+            # lpad keeps NULL keys NULL
+            df = df.withColumn(
+                "k", F.lpad((F.col("k") + 50).cast("string"), 3, "0")
+            )
         got, bcol = bucketed_running_sum(
             df, "v", "k", ["id"], descending=descending, n_buckets=4
         )
         got_rows = {r.id: r.cum for r in got.collect()}
+        assert len(got_rows) == len(data), layout
         # reference: plain python prefix sums over the exact ordering
         # (k desc/asc nulls last, id asc)
         key = lambda t: (  # noqa: E731
@@ -253,6 +258,18 @@ def test_bucketed_running_sum_equals_global_cumsum(spark):
         acc = 0
         for i, k, v in sorted(data, key=key):
             acc += v
-            assert got_rows[i] == acc, (i, k, v, got_rows[i], acc)
+            assert got_rows[i] == acc, (layout, i, k, v, got_rows[i], acc)
+
+    @settings(
+        max_examples=6,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(rows=rows_strategy, descending=st.booleans())
+    def check(rows, descending):
+        data = [(i, k, v) for i, (_, k, v) in enumerate(rows)]
+        for layout in ("plain", "repartition7", "string_key"):
+            verify(data, descending, layout)
 
     check()
+    verify([], False, "plain")
