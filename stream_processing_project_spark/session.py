@@ -62,10 +62,28 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
+    if master is None and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+    if master is not None and master.startswith("local"):
+        # Streaming checkpoints (offset/commit logs, the file-source log,
+        # state-store delta and snapshot files) are written temp-then-
+        # rename. The default FileContext manager's rename calls
+        # getFileLinkStatus, which without the native Hadoop library
+        # forks `readlink` once per rename (and `chmod` on create): on
+        # stream_paced (4 cores) state commit took ~400 ms p50 per batch
+        # and walCommit/commitOffsets/latestOffset 35-45 ms each. The
+        # FileSystem manager renames a local path with File.renameTo,
+        # the same atomic rename(2), and writes the same files, checksums
+        # and .crc files included: state commit 21.5 ms, the logs ~10 ms.
+        # Cluster sessions keep the FileContext default: their file
+        # systems' rename is not rename(2).
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing"
+            ".FileSystemBasedCheckpointFileManager",
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

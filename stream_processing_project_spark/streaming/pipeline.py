@@ -357,7 +357,22 @@ def run_to_completion(
     partitions to executors × cores exactly like batch shuffles; pass
     `state_partitions` accordingly. When not passed, the default derives
     from the session (state_partition_cap) and never caps a
-    large-parallelism session down to the fixture constant."""
+    large-parallelism session down to the fixture constant.
+
+    That default's ceiling is max(12, defaultParallelism): a session
+    whose shuffle.partitions is above it is still capped to it. This is
+    on purpose. A bare session (the external driver's, the rehearsal's)
+    leaves spark.sql.shuffle.partitions at Spark's 200, so taking the
+    session's value when no request is passed would run those streams at
+    200 state partitions.
+
+    The r11 per-partition state-store overhead above (12 vs 32
+    partitions) was measured while every state-partition commit forked a
+    `readlink` process (the FileContext checkpoint manager without the
+    native Hadoop library). Local get_spark sessions now use the
+    FileSystem checkpoint manager, which forks no `readlink` (session.py),
+    so those figures include a per-commit fork that local sessions no
+    longer pay; they have not been re-measured."""
     name = f"q_{uuid.uuid4().hex[:12]}"
     spark = result.sparkSession
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from stream_processing_project_spark.sources.fixtures import load_table
@@ -1126,6 +1128,148 @@ def test_checkpoint_recovery_exactly_once(spark):
 
     got = sorted(r.event_id for r in spark.read.parquet(out).collect())
     assert got == list(range(600))  # every row exactly once, no dupes/gaps
+
+
+_WIN_DDL = "event_id long, ts timestamp, key string, value double"
+
+
+def _window_restart_query(spark):
+    """A watermarked 1-minute window count over a parquet file source,
+    appended to a parquet sink: returns (write, start, src, out, ckpt).
+    `write(rows)` adds one input file; `start()` starts the query on the
+    one checkpoint, one file per micro-batch."""
+    src = tempfile.mkdtemp(prefix="spe-win-src-")
+    out = tempfile.mkdtemp(prefix="spe-win-out-")
+    ckpt = pipeline.checkpoint_dir("win_restart")
+
+    def write(rows):
+        spool_parquet(src, rows, _WIN_DDL)
+
+    def start():
+        return (
+            spark.readStream.schema(_WIN_DDL)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 minute").alias("win"), "key")
+            .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("total"))
+            .select(
+                F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
+                "key",
+                "cnt",
+                "total",
+            )
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    return write, start, src, out, ckpt
+
+
+def _feed(start, write, files):
+    """Start the query, write each of `files` and run the query until it
+    has read it, then stop it. Writing one file at a time fixes the
+    micro-batch order, which decides what the watermark drops."""
+    q = start()
+    try:
+        for rows in files:
+            write(rows)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+# Two input files before the stop: the 00:12 window is still open
+# (watermark 00:02:20) and lives only in the state store.
+_WIN_FIRST = [
+    [(1, "2024-01-01 00:00:10", "a", 1.0),
+     (2, "2024-01-01 00:00:50", "a", 2.0),
+     (3, "2024-01-01 00:01:30", "b", 4.0),
+     (4, "2024-01-01 00:12:00", "a", 8.0)],
+    [(5, "2024-01-01 00:12:20", "a", 16.0),
+     (6, "2024-01-01 00:05:00", "b", 32.0)],
+]
+# After the restart: one more event for the open window, and one that
+# moves the watermark to 00:15 so it closes.
+_WIN_SECOND = [(7, "2024-01-01 00:12:40", "a", 64.0),
+               (8, "2024-01-01 00:25:00", "b", 128.0)]
+
+
+def test_stateful_window_restart_equals_batch(spark):
+    """A local session writes checkpoints through the FileSystem
+    checkpoint manager. A watermarked window query stopped after its
+    first micro-batches and restarted on the same checkpoint restores its
+    window state: the appended output equals the batch answer over all
+    input, including the window whose events straddle the restart."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing"
+        ".FileSystemBasedCheckpointFileManager"
+    )
+    write, start, src, out, _ = _window_restart_query(spark)
+    _feed(start, write, _WIN_FIRST)
+    _feed(start, write, [_WIN_SECOND])  # restart on the same checkpoint
+
+    batch = spark.read.schema(_WIN_DDL).parquet(src)
+    max_ts = batch.agg(F.max("ts")).collect()[0][0]
+    expected = (
+        batch.groupBy(F.window("ts", "1 minute").alias("win"), "key")
+        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("total"))
+        .filter(F.col("win.end") <= F.lit(max_ts) - F.expr("INTERVAL 10 MINUTES"))
+        .select(
+            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
+            "key",
+            "cnt",
+            "total",
+        )
+    )
+    got = sorted(map(tuple, spark.read.parquet(out).collect()))
+    assert got == sorted(map(tuple, expected.collect()))
+    assert ("2024-01-01 00:12:00", "a", 3, 88.0) in got
+
+
+def test_state_checkpoint_checksums_detect_corruption(spark):
+    """Every committed state delta carries Spark's checksum file
+    (`N.delta.crc`) and Hadoop's (`.N.delta.crc`); a flipped byte in a
+    committed delta makes the restart fail with a checksum error instead
+    of loading corrupt state."""
+    import glob
+    import os
+
+    write, start, _, _, ckpt = _window_restart_query(spark)
+    _feed(start, write, _WIN_FIRST)
+
+    deltas = glob.glob(os.path.join(ckpt, "state", "*", "*", "*.delta"))
+    assert deltas
+    for path in deltas:
+        folder, name = os.path.split(path)
+        assert os.path.isfile(os.path.join(folder, name + ".crc")), path
+        assert os.path.isfile(os.path.join(folder, f".{name}.crc")), path
+
+    target = sorted(deltas)[0]
+    with open(target, "r+b") as f:
+        first = f.read(1)
+        f.seek(0)
+        f.write(bytes([first[0] ^ 0xFF]))
+
+    write(_WIN_SECOND)
+    # the checksum error is a cause of the query's failure; the message
+    # carries the causes only with the JVM stack trace
+    spark.conf.set("spark.sql.pyspark.jvmStacktrace.enabled", "true")
+    q = start()
+    try:
+        with pytest.raises(StreamingQueryException) as err:
+            q.processAllAvailable()
+        message = str(err.value)
+    finally:
+        q.stop()
+        spark.conf.unset("spark.sql.pyspark.jvmStacktrace.enabled")
+    assert (
+        "CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED" in message
+        or "ChecksumException" in message
+    ), message[:2000]
 
 
 def test_ewma_state_bridges_micro_batch_boundary(spark):
