@@ -50,7 +50,8 @@ def asof_join(
     at the same (key, ts) and output columns can mix rows (ADVICE
     r11). Callers using ``tiebreak`` must guarantee non-null value
     columns (olap_asof_last_order's are NOT NULL by construction) or
-    pack the payload into a single struct column themselves."""
+    pack the payload into a single struct column themselves.
+    tests/test_cdc_skew.py pins this per-column carry."""
     value_cols = value_cols or [
         c for c in right.columns if c not in (key, right_ts)
     ]

@@ -121,7 +121,9 @@ def multi_pass_fuzzy_pairs(
     with duplicate ids a single pass can emit the same (id_a, id_b)
     pair once per duplicate row, which the dropped dedup used to
     collapse. Callers with non-unique ids must pre-dedup on id_col
-    (the registered linkage_fuzzy_parts passes p_partkey — a key)."""
+    (the registered linkage_fuzzy_parts passes p_partkey — a key).
+    tests/test_governance.py pins the duplicate-id output: one pair row
+    per matching (row a, row b) combination."""
     all_cols = list(dict.fromkeys(c for cols in passes for c in cols))
     slim = df.select(id_col, text_col, *all_cols).localCheckpoint(eager=False)
     parts = [

@@ -61,6 +61,17 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # Generated classes live in one LRU cache per JVM (a static conf,
+        # Spark's default 100 entries). Working sets: 136 classes for the
+        # 11 olap_joins bench queries, ~495-555 for the 35 bench-tagged
+        # queries (sf0.1, local[4]). At 100 every steady-state olap_joins
+        # pass recompiled 72-79 of them with Janino and ran the fresh
+        # classes interpreted until the JIT caught up again (task CPU
+        # 6.8 s vs 4.3 s per traced pass); 1000 covers both sets with
+        # headroom and costs no Metaspace (~156 MiB either way). Each
+        # executor JVM has its own cache, so cluster sessions want the
+        # same size.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if master is None and not os.environ.get("SPARK_MASTER"):
         master = f"local[{cpus}]"

@@ -249,7 +249,15 @@ def minute_counts_stream(
 ) -> DataFrame:
     """A1+A2+A3 streaming: tumbling 1-minute event-time window with
     watermark eviction (the 900 s TTL analogue). Append mode emits each
-    window exactly once when the watermark passes it."""
+    window exactly once when the watermark passes it.
+
+    Fixed per-batch cost: every stateful micro-batch after the first
+    compiles exactly one new class, Spark's watermark-eviction
+    `SpecificPredicate`, with the batch's watermark inlined as a literal
+    (e.g. `value_1 <= 1704535211000000L`); steady-state compiles take
+    4-18 ms (paced window path, sf0.1, local[4]). The class differs in
+    every batch, so no codegen cache size removes it, and it is Spark's
+    code, not this engine's."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 minute").alias("win"), F.col(key).alias("key"))

@@ -131,6 +131,97 @@ def test_asof_join_tiebreak_equals_rownumber_dedup(spark):
     }
 
 
+def test_asof_join_tiebreak_null_value_leaks_per_column(spark):
+    """Pins the documented per-column carry under ``tiebreak``: each value
+    column is the LAST NON-NULL value in (ts, tiebreak) order among the
+    key's right rows with ts <= the left ts. So a NULL in the winning
+    row's column leaks that column from the losing row at the same
+    (key, ts), or from an earlier version, and one output row can mix
+    rows. Checked on a crafted leak, then on adversarial rows (ts ties,
+    NULL values, a shuffled tiebreak order), with the tiebreak both
+    outside and inside ``value_cols``."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from stream_processing_project_spark.operators.asof import asof_join
+
+    def reference(left, right, value_cols):
+        out = set()
+        for eid, k, t in left:
+            seen = sorted(
+                (r for r in right if r[0] == k and r[1] <= t),
+                key=lambda r: (r[1], r[2]),
+            )
+            carried = []
+            for c in value_cols:
+                i = {"vid": 2, "v1": 3, "v2": 4}[c]
+                vals = [r[i] for r in seen if r[i] is not None]
+                carried.append(vals[-1] if vals else None)
+            out.add((eid, *carried))
+        return out
+
+    def run(left, right, value_cols):
+        got = asof_join(
+            spark.createDataFrame(left, "event_id long, user_id long, ts long"),
+            spark.createDataFrame(
+                right, "user_id long, vts long, vid long, v1 long, v2 string"
+            ),
+            key="user_id",
+            left_ts="ts",
+            right_ts="vts",
+            value_cols=value_cols,
+            tiebreak="vid",
+        )
+        return set(map(tuple, got.select("event_id", *value_cols).collect()))
+
+    # vid 9 wins the tie at ts 1 but has v1 NULL: v1 leaks from vid 5,
+    # v2 comes from vid 9; at ts 3 the lone winner's NULL v2 leaks "high"
+    crafted_left = [(1, 7, 1), (2, 7, 3), (3, 7, 0)]
+    crafted_right = [
+        (7, 1, 5, 10, "low"),
+        (7, 1, 9, None, "high"),
+        (7, 3, 2, 30, None),
+    ]
+    assert run(crafted_left, crafted_right, ["vid", "v1", "v2"]) == {
+        (1, 9, 10, "high"),
+        (2, 2, 30, "high"),
+        (3, None, None, None),
+    }
+    assert run(crafted_left, crafted_right, ["v1", "v2"]) == {
+        (1, 10, "high"),
+        (2, 30, "high"),
+        (3, None, None),
+    }
+
+    version = st.tuples(
+        st.integers(min_value=0, max_value=1),  # key
+        st.integers(min_value=0, max_value=2),  # ts: heavy ties
+        st.one_of(st.none(), st.integers(min_value=-5, max_value=5)),
+        st.one_of(st.none(), st.sampled_from(["a", "b"])),
+    )
+
+    @settings(
+        max_examples=5,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(
+        versions=st.lists(version, min_size=1, max_size=8),
+        data=st.data(),
+    )
+    def check(versions, data):
+        # unique tiebreak per row, in an order unrelated to insertion
+        vids = data.draw(st.permutations(range(len(versions))))
+        right = [
+            (k, t, vid, v1, v2) for (k, t, v1, v2), vid in zip(versions, vids)
+        ]
+        left = [(3 * k + t, k, t) for k in (0, 1) for t in (0, 1, 2)]
+        for cols in (["v1", "v2"], ["vid", "v1", "v2"]):
+            assert run(left, right, cols) == reference(left, right, cols)
+
+    check()
+
+
 def test_range_join_equals_naive_between(spark):
     """Binned range join must equal the naive BETWEEN join, including
     intervals spanning multiple buckets and bucket-boundary values."""

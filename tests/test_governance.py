@@ -116,6 +116,93 @@ def test_multi_pass_blocking_unions_and_dedups(spark):
     assert got == [(1, 2), (3, 4)]
 
 
+def test_multi_pass_with_duplicate_ids_reemits_per_duplicate_row(spark):
+    """Pins the documented behaviour outside the unique-`id_col`
+    precondition: nothing dedups pairs, so with duplicate ids a pair is
+    emitted once per (row a, row b) combination that a pass matches —
+    the naive per-pass row-pair enumeration below, with SQL NULL
+    semantics for block keys and texts. Adversarial rows: ids from a
+    tiny range (duplicates with equal AND differing texts/keys), NULL
+    keys, NULL and empty texts."""
+    from collections import Counter
+
+    from hypothesis import HealthCheck, example, given, settings
+    from hypothesis import strategies as st
+
+    from stream_processing_project_spark.operators.linkage import (
+        multi_pass_fuzzy_pairs,
+    )
+
+    passes, k = [["b1"], ["b2"]], 1
+
+    def lev(a: str, b: str) -> int:
+        prev = list(range(len(b) + 1))
+        for i, ca in enumerate(a, 1):
+            cur = [i]
+            for j, cb in enumerate(b, 1):
+                cur.append(
+                    min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
+                )
+            prev = cur
+        return prev[-1]
+
+    def sql_eq(a, b, keys) -> bool:
+        return all(a[c] is not None and a[c] == b[c] for c in keys)
+
+    def reference(rows) -> Counter:
+        out = Counter()
+        for i, keys in enumerate(passes):
+            for a in rows:
+                for b in rows:
+                    if not (a["id"] < b["id"] and sql_eq(a, b, keys)):
+                        continue
+                    if any(sql_eq(a, b, prev) for prev in passes[:i]):
+                        continue
+                    if a["name"] is None or b["name"] is None:
+                        continue
+                    d = lev(a["name"], b["name"])
+                    if d <= k:
+                        out[(a["id"], b["id"], a["name"], b["name"], d)] += 1
+        return out
+
+    row = st.fixed_dictionaries(
+        {
+            "id": st.integers(min_value=0, max_value=3),
+            "name": st.one_of(st.none(), st.text(alphabet="ab", max_size=3)),
+            "b1": st.sampled_from(["x", "y", None]),
+            "b2": st.sampled_from(["p", None]),
+        }
+    )
+
+    @settings(
+        max_examples=6,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    # one exact copy of id 2: (1, 2) matches in both passes, so the
+    # disjoint union emits it once per copy of the row — twice
+    @example(
+        rows=[
+            {"id": 1, "name": "ab", "b1": "x", "b2": "p"},
+            {"id": 2, "name": "aa", "b1": "x", "b2": "p"},
+            {"id": 2, "name": "aa", "b1": "x", "b2": "p"},
+        ]
+    )
+    @given(rows=st.lists(row, min_size=2, max_size=9))
+    def check(rows):
+        df = spark.createDataFrame(
+            [(r["id"], r["name"], r["b1"], r["b2"]) for r in rows],
+            "id long, name string, b1 string, b2 string",
+        )
+        got = Counter(
+            tuple(r)
+            for r in multi_pass_fuzzy_pairs(df, "id", "name", passes, k).collect()
+        )
+        assert got == reference(rows)
+
+    check()
+
+
 def test_per_key_cap_bounds_and_is_partitioning_proof(spark):
     from stream_processing_project_spark.operators.sampling import per_key_cap
 
